@@ -12,7 +12,7 @@ from pyspark.sql.window import Window
 
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # --- funnel ------------------------------------------------------------------
 
@@ -788,17 +788,15 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="ts"
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_rollup_")
-    q = streaming_rollup_sink(
-        src.select("ts", "event_type", "value"),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_rollup_ck_"),
+    drain(
+        spark,
+        lambda: streaming_rollup_sink(
+            src.select("ts", "event_type", "value"),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_rollup_ck_"),
+        ),
+        "streaming_daily_rollup",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_daily_rollup did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_rollup_view(spark, work_dir)
 
 

@@ -533,27 +533,27 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("doc_id") % 4 == 0)
     work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_")
     statics: list = []
-    q = streaming_incremental_dedup_sink(
-        src,
-        history,
-        hist_banded,
-        with_shingles(docs),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_sdedup_ck_"),
-        threshold=_INCR_THR,
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-        static_frames_out=statics,
-        # map-side static build only (r16): the per-epoch cache variants
-        # that came with this seam in pass 1 measured slower and are gone
-        corpus_sets_df=shingle_sets(docs),
-    )
     try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_incremental_dedup did not drain in {drain_timeout():g}s")
+        drain(
+            spark,
+            lambda: streaming_incremental_dedup_sink(
+                src,
+                history,
+                hist_banded,
+                with_shingles(docs),
+                work_dir=work_dir,
+                checkpoint=tempfile.mkdtemp(prefix="rlink_sdedup_ck_"),
+                threshold=_INCR_THR,
+                n_hashes=_N_HASHES,
+                bands=_BANDS,
+                static_frames_out=statics,
+                # map-side static build only (r16): the per-epoch cache variants
+                # that came with this seam in pass 1 measured slower and are gone
+                corpus_sets_df=shingle_sets(docs),
+            ),
+            "streaming_incremental_dedup",
+        )
     finally:
-        if q.isActive:
-            q.stop()
         for f in statics:
             f.unpersist()
     return read_verdicts(spark, work_dir)
@@ -565,7 +565,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 import dataclasses as _dc  # noqa: E402
 
 from rlink_rs_spark.queries.base import REGISTRY as _REG  # noqa: E402
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 _REG["streaming_incremental_dedup"] = _dc.replace(
     _REG["streaming_incremental_dedup"], oracle=_REG["incremental_batch_dedup"].oracle

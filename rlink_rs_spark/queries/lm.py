@@ -224,7 +224,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch twin's explode+join+SUM, so the DuckDB oracle hash-matches;
       * exactly-once via the parquet sink's _spark_metadata manifest."""
     import os
-    import tempfile
 
     from rlink_rs_spark.operators.lm import (
         load_or_train_lm_lut,
@@ -262,22 +261,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((-sum_lp) / (n_bigrams * float(LM_SCALE))).alias("nll_per_char"),
         ((-sum_lp) * 100 <= n_bigrams * (_QG_THR_CENTI * LM_SCALE)).alias("passes"),
     )
-    out_dir = tempfile.mkdtemp(prefix="rlink_qgate_out_")
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="rlink_qgate_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_quality_gate did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.read.parquet(out_dir)
+    return run_to_parquet(gated)
 
 
 # --- full streaming intake pipeline (quality gate + incremental dedup) --------
@@ -285,7 +269,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 import dataclasses as _dc  # noqa: E402
 
 from rlink_rs_spark.queries.base import REGISTRY as _LM_REG  # noqa: E402
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain, run_to_parquet  # noqa: E402
 
 
 @register(
@@ -367,26 +351,26 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("doc_id") % 4 == 0)
     work_dir = tempfile.mkdtemp(prefix="rlink_intake_")
     statics: list = []
-    q = streaming_incremental_dedup_sink(
-        src,
-        history,
-        hist_banded,
-        with_shingles(docs),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_intake_ck_"),
-        threshold=_INCR_THR,
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-        score_fn=score_fn,
-        static_frames_out=statics,
-        corpus_sets_df=shingle_sets(docs),
-    )
     try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_intake_pipeline did not drain in {drain_timeout():g}s")
+        drain(
+            spark,
+            lambda: streaming_incremental_dedup_sink(
+                src,
+                history,
+                hist_banded,
+                with_shingles(docs),
+                work_dir=work_dir,
+                checkpoint=tempfile.mkdtemp(prefix="rlink_intake_ck_"),
+                threshold=_INCR_THR,
+                n_hashes=_N_HASHES,
+                bands=_BANDS,
+                score_fn=score_fn,
+                static_frames_out=statics,
+                corpus_sets_df=shingle_sets(docs),
+            ),
+            "streaming_intake_pipeline",
+        )
     finally:
-        if q.isActive:
-            q.stop()
         for f in statics:
             f.unpersist()
     return read_verdicts(spark, work_dir, with_quality=True)

@@ -21,7 +21,7 @@ from rlink_rs_spark.operators.dedup import (
 )
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # --- benchmark decontamination ----------------------------------------------
 
@@ -1008,18 +1008,43 @@ def streaming_intake_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="doc_id",
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_dlq_")
-    q = streaming_dlq_sink(
-        src.select("doc_id", "lang", "source", "n_chars"),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_dlq_ck_"),
+    drain(
+        spark,
+        lambda: streaming_dlq_sink(
+            src.select("doc_id", "lang", "source", "n_chars"),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_dlq_ck_"),
+        ),
+        "streaming_intake_dlq",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_intake_dlq did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_clean(spark, work_dir).unionByName(read_dlq(spark, work_dir))
+
+
+_DECON_SCHEMA = "corpus_id bigint, eval_id bigint, shared_ngrams bigint"
+
+
+def _decon_screen(docs: DataFrame):
+    """The streaming screen's per-epoch transform: the eval side's shingle
+    postings are built once from `docs`, and each micro-batch shingles
+    its own corpus docs and joins them against the (broadcast) postings."""
+    is_eval = F.pmod(F.col("doc_id"), F.lit(_EVAL_MOD)) == _EVAL_RES
+    eval_sh = (
+        with_shingles(docs.where(is_eval), k=_DECON_K)
+        .select(F.col("doc_id").alias("eval_id"), "shingle")
+    )
+
+    def screen(batch_df: DataFrame) -> DataFrame:
+        corp_sh = with_shingles(
+            batch_df.where(~is_eval), k=_DECON_K
+        ).select(F.col("doc_id").alias("corpus_id"), "shingle")
+        return (
+            corp_sh.join(F.broadcast(eval_sh), "shingle")
+            .groupBy("corpus_id", "eval_id")
+            .agg(F.count("*").cast("bigint").alias("shared_ngrams"))
+            .where(F.col("shared_ngrams") >= _DECON_MIN_SHARED)
+        )
+
+    return screen
 
 
 @register(
@@ -1043,45 +1068,22 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlink_rs_spark.streaming.deltas import delta_sink, read_deltas
     from rlink_rs_spark.streaming.sources import file_stream
 
-    docs = load_table(spark, sf_dir, "documents")
-    is_eval = F.pmod(F.col("doc_id"), F.lit(_EVAL_MOD)) == _EVAL_RES
-    eval_sh = (
-        with_shingles(docs.where(is_eval), k=_DECON_K)
-        .select(F.col("doc_id").alias("eval_id"), "shingle")
-    )
-
-    def screen(batch_df: DataFrame) -> DataFrame:
-        corp_sh = with_shingles(
-            batch_df.where(F.pmod(F.col("doc_id"), F.lit(_EVAL_MOD)) != _EVAL_RES),
-            k=_DECON_K,
-        ).select(F.col("doc_id").alias("corpus_id"), "shingle")
-        return (
-            corp_sh.join(F.broadcast(eval_sh), "shingle")
-            .groupBy("corpus_id", "eval_id")
-            .agg(F.count("*").cast("bigint").alias("shared_ngrams"))
-            .where(F.col("shared_ngrams") >= _DECON_MIN_SHARED)
-        )
-
     src = file_stream(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2,
         order_col="doc_id",
     )
     state_dir = tempfile.mkdtemp(prefix="rlink_decon_")
-    q = delta_sink(
-        src.select("doc_id", "text"),
-        transform=screen,
-        state_dir=state_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_decon_ck_"),
+    drain(
+        spark,
+        lambda: delta_sink(
+            src.select("doc_id", "text"),
+            transform=_decon_screen(load_table(spark, sf_dir, "documents")),
+            state_dir=state_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_decon_ck_"),
+        ),
+        "streaming_decontamination",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_decontamination did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
-    return read_deltas(
-        spark, state_dir, "corpus_id bigint, eval_id bigint, shared_ngrams bigint"
-    )
+    return read_deltas(spark, state_dir, _DECON_SCHEMA)
 
 
 @register(
@@ -1112,16 +1114,14 @@ def streaming_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="doc_id",
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_pack_")
-    q = streaming_pack_sink(
-        src.select("doc_id", "lang", "text"),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_pack_ck_"),
-        ctx_len=_CTX_LEN,
+    drain(
+        spark,
+        lambda: streaming_pack_sink(
+            src.select("doc_id", "lang", "text"),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_pack_ck_"),
+            ctx_len=_CTX_LEN,
+        ),
+        "streaming_pack_sequences",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_pack_sequences did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_packed_bins(spark, work_dir)

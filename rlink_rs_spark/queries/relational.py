@@ -21,7 +21,7 @@ from rlink_rs_spark.operators.aggregations import sum_exact
 from rlink_rs_spark.operators.joins import broadcast_enrich, union_aligned
 from rlink_rs_spark.queries.base import SUM_EXACT_SQL, register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 
 # --- flat_map / filter (row transforms) ------------------------------------
@@ -1135,7 +1135,7 @@ def kafka_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from rlink_rs_spark.sources.kafka_datasource import register_kafka_source
     from rlink_rs_spark.sources.loopback import to_envelope
-    from rlink_rs_spark.streaming.runner import drain_timeout
+    from rlink_rs_spark.streaming.runner import drain
     from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
     staged = stage_stream_dir(sf_dir, "events", chunks=4, order_col="ts")
@@ -1152,20 +1152,15 @@ def kafka_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_kafka_source(spark)
     topic_dir = tempfile.mkdtemp(prefix="rlink_pyds_sink_")
     ck = tempfile.mkdtemp(prefix="rlink_pyds_sink_ck_")
-    q = (
-        envelope.writeStream.format("rlink_kafka")
+    drain(
+        spark,
+        lambda: envelope.writeStream.format("rlink_kafka")
         .option("topicdir", topic_dir)
         .option("checkpointLocation", ck)
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        "rlink_kafka producer",
     )
-    try:
-        finished = q.awaitTermination(drain_timeout(300.0))
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError("rlink_kafka producer did not drain in time")
 
     payload_schema = T.StructType(
         [
@@ -1646,20 +1641,18 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2,
         order_col="doc_id",
     )
-    q = streaming_merge_sink(
-        src.select("doc_id", "text", "lang", "source", "n_chars"),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_ck_"),
-        # staged chunks are contiguous doc_id slices -> closed-form epoch
-        # change keys (streaming/cdc.py, r16 guide §8)
-        contiguous_keys=True,
+    drain(
+        spark,
+        lambda: streaming_merge_sink(
+            src.select("doc_id", "text", "lang", "source", "n_chars"),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_ck_"),
+            # staged chunks are contiguous doc_id slices -> closed-form epoch
+            # change keys (streaming/cdc.py, r16 guide §8)
+            contiguous_keys=True,
+        ),
+        "streaming_cdc_merge",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_cdc_merge did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_merged_snapshot(spark, work_dir)
 
 
@@ -1691,6 +1684,7 @@ def _cdc_snapshot_artifact(
         streaming_merge_sink,
         write_base_snapshot,
     )
+    from rlink_rs_spark.streaming.deltas import committed_epochs
     from rlink_rs_spark.streaming.sources import file_stream
 
     repo_root = os.path.dirname(
@@ -1699,10 +1693,14 @@ def _cdc_snapshot_artifact(
     cache_root = os.path.join(repo_root, "artifacts", "cdc_snapshots")
     key = f"r{retain}_{_documents_fingerprint(sf_dir)}"
     work_dir = os.path.join(cache_root, key)
-    if os.path.exists(os.path.join(work_dir, "_STREAM_DONE")):
+    # a build that predates the epoch-commit layout of streaming/deltas.py
+    # has the sentinel but no committed epochs: rebuild it like a torn one
+    if os.path.exists(os.path.join(work_dir, "_STREAM_DONE")) and committed_epochs(
+        work_dir
+    ):
         return work_dir
     os.makedirs(cache_root, exist_ok=True)
-    if os.path.exists(work_dir):  # torn build (no sentinel): clear and rebuild
+    if os.path.exists(work_dir):  # torn build: clear and rebuild
         shutil.rmtree(work_dir, ignore_errors=True)
     write_base_snapshot(load_table(spark, sf_dir, "documents"), work_dir)
     # chunks=4 is SEMANTIC for this artifact: cdc_time_travel reads
@@ -1713,19 +1711,17 @@ def _cdc_snapshot_artifact(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=4,
         order_col="doc_id",
     )
-    q = streaming_merge_sink(
-        src.select("doc_id", "text", "lang", "source", "n_chars"),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_art_ck_"),
-        retain=retain,
-        contiguous_keys=True,
+    drain(
+        spark,
+        lambda: streaming_merge_sink(
+            src.select("doc_id", "text", "lang", "source", "n_chars"),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_art_ck_"),
+            retain=retain,
+            contiguous_keys=True,
+        ),
+        "cdc snapshot artifact build",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"cdc snapshot artifact build did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     with open(os.path.join(work_dir, "_STREAM_DONE"), "w"):
         pass
     return work_dir
@@ -1847,9 +1843,8 @@ def cdc_optimize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinary resolution path -- proving reader equivalence by the same
     oracle hash the MERGE stream answers to. The copy is O(snapshot
     metadata) at fixture scale; in production OPTIMIZE rewrites in place
-    between stream epochs and commits via the same sentinel protocol
+    between stream epochs and commits like any epoch
     (crash-mid-OPTIMIZE invisibility is pytest-pinned)."""
-    import os
     import shutil
     import tempfile
 
@@ -1860,9 +1855,7 @@ def cdc_optimize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src_dir = _cdc_snapshot_artifact(spark, sf_dir, retain=8)
     work_dir = tempfile.mkdtemp(prefix="rlink_cdc_opt_")
-    shutil.copytree(
-        os.path.join(src_dir, "snap"), os.path.join(work_dir, "snap")
-    )
+    shutil.copytree(src_dir, work_dir, dirs_exist_ok=True)
     stats = optimize_snapshot(spark, work_dir, max_files_per_bucket=1)
     assert stats["files_after"] <= stats["files_before"]
     return read_merged_snapshot(spark, work_dir)
@@ -2336,19 +2329,17 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=4,
         order_col="doc_id",
     )
-    q = streaming_merge_sink(
-        src.select("doc_id", "text", "lang", "source", "n_chars"),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_evo_ck_"),
-        evolve_rev_from=2,
-        contiguous_keys=True,
+    drain(
+        spark,
+        lambda: streaming_merge_sink(
+            src.select("doc_id", "text", "lang", "source", "n_chars"),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_evo_ck_"),
+            evolve_rev_from=2,
+            contiguous_keys=True,
+        ),
+        "cdc_schema_evolution",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"cdc_schema_evolution did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_snapshot(spark, work_dir, 1 << 62, schema=_SNAP_SCHEMA_V2)
 
 
@@ -2549,18 +2540,16 @@ def streaming_constraint_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=3, order_col="ts"
     ).select("event_type", "user_id")
-    q = delta_sink(
-        src,
-        _events_constraint_rows,
-        state,
-        tempfile.mkdtemp(prefix="rlink_cmon_ck_"),
+    drain(
+        spark,
+        lambda: delta_sink(
+            src,
+            _events_constraint_rows,
+            state,
+            tempfile.mkdtemp(prefix="rlink_cmon_ck_"),
+        ),
+        "streaming_constraint_monitor",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_constraint_monitor did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     rep = (
         read_deltas(
             spark, state, "table_name string, constraint_name string, violations bigint"

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # Fixed benchmark query set (vocabulary drawn from the synthetic corpus).
 BM25_QUERIES: list[tuple[str, list[str]]] = [
@@ -333,17 +333,15 @@ def streaming_bm25_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="doc_id",
     )
     state_dir = tempfile.mkdtemp(prefix="rlink_bm25_idx_")
-    q = streaming_bm25_index_sink(
-        src.select("doc_id", "text"),
-        state_dir=state_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_bm25_idx_ck_"),
+    drain(
+        spark,
+        lambda: streaming_bm25_index_sink(
+            src.select("doc_id", "text"),
+            state_dir=state_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_bm25_idx_ck_"),
+        ),
+        "streaming_bm25_index_add",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_bm25_index_add did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     tf = read_posting_table(spark, state_dir).cache()
     return bm25_score_tf(spark, tf)
 
@@ -610,13 +608,17 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlink_rs_spark.streaming.sources import file_stream
 
     bm_state = tempfile.mkdtemp(prefix="rlink_hyb_bm25_")
-    q_bm = streaming_bm25_index_sink(
-        file_stream(
-            spark, sf_dir, "documents", max_files_per_trigger=1, chunks=3,
-            order_col="doc_id",
-        ).select("doc_id", "text"),
-        state_dir=bm_state,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_bm25_ck_"),
+    drain(
+        spark,
+        lambda: streaming_bm25_index_sink(
+            file_stream(
+                spark, sf_dir, "documents", max_files_per_trigger=1, chunks=3,
+                order_col="doc_id",
+            ).select("doc_id", "text"),
+            state_dir=bm_state,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_bm25_ck_"),
+        ),
+        "streaming_hybrid_search bm25 leg",
     )
     emb = load_table(spark, sf_dir, "embeddings")
     codebook = sim_ops.load_or_train_ivf_codebook(
@@ -629,24 +631,20 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=_IVF_ITERS,
     )
     ivf_state = tempfile.mkdtemp(prefix="rlink_hyb_ivf_")
-    q_ivf = streaming_index_add_sink(
-        file_stream(
-            spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=3,
-            order_col="vec_id",
-        ).select("vec_id", "embedding"),
-        codebook=codebook,
-        state_dir=ivf_state,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_ivf_ck_"),
-        dims=_DIMS,
+    drain(
+        spark,
+        lambda: streaming_index_add_sink(
+            file_stream(
+                spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=3,
+                order_col="vec_id",
+            ).select("vec_id", "embedding"),
+            codebook=codebook,
+            state_dir=ivf_state,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_ivf_ck_"),
+            dims=_DIMS,
+        ),
+        "streaming_hybrid_search ivf leg",
     )
-    for q, leg in ((q_bm, "bm25"), (q_ivf, "ivf")):
-        try:
-            if not q.awaitTermination(drain_timeout()):
-                raise TimeoutError(f"streaming_hybrid_search {leg} leg did not drain")
-        finally:
-            if q.isActive:
-                q.stop()
-
     return serve_hybrid(
         spark,
         read_posting_table(spark, bm_state).cache(),

@@ -971,29 +971,25 @@ def streaming_outlier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="vec_id",
     )
     out_dir = tempfile.mkdtemp(prefix="rlink_outlier_")
-    q = streaming_outlier_sink(
-        src.select("vec_id", "label", "embedding"),
-        cents=cents,
-        out_dir=out_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_outlier_ck_"),
-        dims=_DIMS,
-        threshold=_OUTLIER_THR,
+    drain(
+        spark,
+        lambda: streaming_outlier_sink(
+            src.select("vec_id", "label", "embedding"),
+            cents=cents,
+            out_dir=out_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_outlier_ck_"),
+            dims=_DIMS,
+            threshold=_OUTLIER_THR,
+        ),
+        "streaming_outlier_monitor",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(
-                f"streaming_outlier_monitor did not drain in {drain_timeout():g}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
     return read_outlier_results(spark, out_dir)
 
 
 # --- ANN evaluation: recall vs exact -----------------------------------------
 
 from rlink_rs_spark.queries.base import REGISTRY as _SIM_REG  # noqa: E402
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # The recall oracle composes the two registered oracles verbatim as
 # subqueries (both are deterministic SELECTs of (query_id, neighbor_id,
@@ -1161,24 +1157,22 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=2, order_col="label"
     ).where(F.col("vec_id") < _N_QUERIES)
     out_dir = tempfile.mkdtemp(prefix="rlink_ann_probe_")
-    q = streaming_ann_probe_sink(
-        src.select("vec_id", "embedding"),
-        corpus=emb,
-        codebook=codebook,
-        assignment=assignment,
-        out_dir=out_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_ann_probe_ck_"),
-        dims=_DIMS,
-        k=_K,
-        n_cells=_IVF_CELLS,
-        n_probe=_IVF_PROBE,
+    drain(
+        spark,
+        lambda: streaming_ann_probe_sink(
+            src.select("vec_id", "embedding"),
+            corpus=emb,
+            codebook=codebook,
+            assignment=assignment,
+            out_dir=out_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_ann_probe_ck_"),
+            dims=_DIMS,
+            k=_K,
+            n_cells=_IVF_CELLS,
+            n_probe=_IVF_PROBE,
+        ),
+        "streaming_ann_probe",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_ann_probe did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_probe_results(spark, out_dir)
 
 
@@ -1237,19 +1231,17 @@ def streaming_ivf_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="vec_id",
     )
     state_dir = tempfile.mkdtemp(prefix="rlink_ivf_add_")
-    q = streaming_index_add_sink(
-        src.select("vec_id", "embedding"),
-        codebook=codebook,
-        state_dir=state_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_ivf_add_ck_"),
-        dims=_DIMS,
+    drain(
+        spark,
+        lambda: streaming_index_add_sink(
+            src.select("vec_id", "embedding"),
+            codebook=codebook,
+            state_dir=state_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_ivf_add_ck_"),
+            dims=_DIMS,
+        ),
+        "streaming_ivf_index_add",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_ivf_index_add did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_inverted_file(spark, state_dir)
 
 

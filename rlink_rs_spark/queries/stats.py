@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # shared double-precision tail (identical text in Spark SQL and DuckDB):
 # inputs sc = SUM(cents) :: BIGINT, sq = SUM(cents^2) :: BIGINT, n :: BIGINT.
@@ -218,20 +218,18 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="event_id"
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_kmv_")
-    q = streaming_kmv_sink(
-        src.select("event_type", "user_id"),
-        group_col="event_type",
-        value_col="user_id",
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_kmv_ck_"),
-        k=_KMV_K,
+    drain(
+        spark,
+        lambda: streaming_kmv_sink(
+            src.select("event_type", "user_id"),
+            group_col="event_type",
+            value_col="user_id",
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_kmv_ck_"),
+            k=_KMV_K,
+        ),
+        "streaming_kmv_distinct",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_kmv_distinct did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_kmv_estimate(spark, work_dir, k=_KMV_K)
 
 
@@ -503,19 +501,17 @@ def streaming_cms_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="event_id"
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_cms_")
-    q = streaming_cms_sink(
-        src.select("user_id"),
-        bucket_expr=_CMS_B_SPARK,
-        d=_CMS_D,
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cms_ck_"),
+    drain(
+        spark,
+        lambda: streaming_cms_sink(
+            src.select("user_id"),
+            bucket_expr=_CMS_B_SPARK,
+            d=_CMS_D,
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_cms_ck_"),
+        ),
+        "streaming_cms_counters",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_cms_counters did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_cms_counters(spark, work_dir)
 
 

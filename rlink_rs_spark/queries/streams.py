@@ -1465,7 +1465,7 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         subscribe,
         to_envelope,
     )
-    from rlink_rs_spark.streaming.runner import drain_timeout
+    from rlink_rs_spark.streaming.runner import drain
 
     # KafkaGenAppStream half (app.rs:40-86): model rows -> JSON payload
     # envelope -> producer. Keyed by event_id (the reference keys with
@@ -1498,19 +1498,12 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_env = example_kafka_plan(spark, src)
     out_dir = tempfile.mkdtemp(prefix="rlink_ekafka_out_")
     ck = tempfile.mkdtemp(prefix="rlink_ekafka_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = publish_stream(out_env, out_dir, ck)
-        try:
-            finished = q.awaitTermination(drain_timeout(300.0))
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        raise TimeoutError("example-kafka replay did not drain in time")
+    drain(
+        spark,
+        lambda: publish_stream(out_env, out_dir, ck),
+        "example-kafka replay",
+        shuffle_partitions=8,
+    )
 
     out_payload = T.StructType(
         [

@@ -18,7 +18,7 @@ from rlink_rs_spark.operators.text import (
 )
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 _TOK_DUCK = "string_split(text, ' ')"
 
@@ -1147,19 +1147,17 @@ def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2, order_col="doc_id"
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_reservoir_")
-    q = streaming_weighted_reservoir_sink(
-        src.select("lang", "doc_id", "n_chars"),
-        key_expr=_WS_KEY.format(h=_WS_H_SPARK),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_reservoir_ck_"),
-        top_k=_WS_TOP_K,
+    drain(
+        spark,
+        lambda: streaming_weighted_reservoir_sink(
+            src.select("lang", "doc_id", "n_chars"),
+            key_expr=_WS_KEY.format(h=_WS_H_SPARK),
+            work_dir=work_dir,
+            checkpoint=tempfile.mkdtemp(prefix="rlink_reservoir_ck_"),
+            top_k=_WS_TOP_K,
+        ),
+        "streaming_weighted_reservoir",
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_weighted_reservoir did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
     return read_reservoir(spark, work_dir, top_k=_WS_TOP_K)
 
 

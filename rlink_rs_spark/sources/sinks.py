@@ -26,6 +26,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from rlink_rs_spark.streaming.deltas import start_epoch_sink
+
 
 def console_sink(stream_df: DataFrame, checkpoint: str, num_rows: int = 20) -> StreamingQuery:
     """print_sink analogue; window struct columns render their bounds like
@@ -60,7 +62,6 @@ def foreach_batch_sink(
     bulk_write: BulkWriter,
     checkpoint: str,
     max_batch_rows: int | None = None,
-    output_mode: str = "append",
 ) -> StreamingQuery:
     """ES/ClickHouse-shaped bulk sink: per micro-batch, hand row-dict chunks
     plus the epoch id to `bulk_write` (which targets the external system;
@@ -84,13 +85,7 @@ def foreach_batch_sink(
 
         batch_df.foreachPartition(write_partition)
 
-    return (
-        stream_df.writeStream.outputMode(output_mode)
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epoch_sink(stream_df, handle, checkpoint)
 
 
 def kafka_sink_options(topic: str, brokers: str) -> dict[str, str]:

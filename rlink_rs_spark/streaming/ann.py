@@ -10,9 +10,7 @@ per-query top-k. A query's result depends only on that query and the
 standing index, so the drained union across epochs is row-identical to
 the batch probe over the same query set and SHARES its DuckDB oracle.
 
-Epoch protocol: results for epoch N commit to `<out>/batch_id=N` with
-overwrite semantics -- a crash-replayed epoch rewrites byte-identical
-rows (the probe is deterministic), so the drained union is exactly-once.
+Epoch protocol: streaming/deltas.py (results of epoch N in `<out>/batch_id=N`).
 
 Reference parity: a stream of lookups against broadcast/persisted state
 is the reference's ConfigInputFormat dimension-stream pattern
@@ -22,10 +20,13 @@ big side stands and the small side streams.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rlink_rs_spark.streaming import deltas
+
+_PROBE_SCHEMA = "query_id bigint, neighbor_id bigint, cosine double, rank int"
+_OUTLIER_SCHEMA = "vec_id bigint, label int, centroid_cos double"
 
 
 def streaming_ann_probe_sink(
@@ -57,30 +58,17 @@ def streaming_ann_probe_sink(
             codebook=codebook,
             assignment=assignment,
         ).select("query_id", "neighbor_id", "cosine", "rank")
-        res.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={epoch_id}")
-        )
+        res.write.mode("overwrite").parquet(deltas.epoch_dir(out_dir, "", epoch_id))
+        deltas.commit_epoch(out_dir, epoch_id)
 
-    return (
-        query_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(query_stream, handle, checkpoint)
 
 
 def read_probe_results(spark: SparkSession, out_dir: str) -> DataFrame:
     """Union of all committed epochs (queries are disjoint across epochs;
     replayed epochs overwrote in place)."""
-    if not os.path.isdir(out_dir) or not any(
-        d.startswith("batch_id=") for d in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cosine double, rank int"
-        )
-    return spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "query_id", "neighbor_id", "cosine", "rank"
+    return deltas.read_committed(
+        spark, out_dir, "", _PROBE_SCHEMA, deltas.committed_epochs(out_dir)
     )
 
 
@@ -109,9 +97,8 @@ def streaming_index_add_sink(
     Overwrite-per-epoch makes crash replays byte-identical:
     exactly-once."""
     from rlink_rs_spark.operators.similarity import ivf_assign
-    from rlink_rs_spark.streaming.deltas import delta_sink
 
-    return delta_sink(
+    return deltas.delta_sink(
         emb_stream,
         lambda batch: ivf_assign(batch, codebook, dims),
         state_dir,
@@ -125,9 +112,7 @@ def read_inverted_file(spark: SparkSession, state_dir: str) -> DataFrame:
     """The full inverted file: newest committed base + committed deltas
     above it. Vectors are disjoint across epochs, so that union is the
     index."""
-    from rlink_rs_spark.streaming.deltas import read_deltas
-
-    return read_deltas(spark, state_dir, _INVERTED_SCHEMA)
+    return deltas.read_deltas(spark, state_dir, _INVERTED_SCHEMA)
 
 
 # --- streaming outlier monitor ----------------------------------------------
@@ -161,27 +146,14 @@ def streaming_outlier_sink(
             .select("vec_id", "label", cos.alias("centroid_cos"))
             .where(F.col("centroid_cos") < threshold)
         )
-        res.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={epoch_id}")
-        )
+        res.write.mode("overwrite").parquet(deltas.epoch_dir(out_dir, "", epoch_id))
+        deltas.commit_epoch(out_dir, epoch_id)
 
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(vec_stream, handle, checkpoint)
 
 
 def read_outlier_results(spark: SparkSession, out_dir: str) -> DataFrame:
     """Union of all committed epochs (vectors are disjoint across epochs)."""
-    if not os.path.isdir(out_dir) or not any(
-        d.startswith("batch_id=") for d in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame(
-            [], "vec_id bigint, label int, centroid_cos double"
-        )
-    return spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "vec_id", "label", "centroid_cos"
+    return deltas.read_committed(
+        spark, out_dir, "", _OUTLIER_SCHEMA, deltas.committed_epochs(out_dir)
     )

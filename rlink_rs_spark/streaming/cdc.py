@@ -14,27 +14,14 @@ The CURRENT version of bucket B is its newest committed ``batch_id``
 dir; reading the snapshot is one union over the per-bucket newest
 versions, O(1) dirs per bucket regardless of stream length.
 
-Committed means the dir carries OUR ``_COMMITTED`` sentinel, written
-only after the epoch's FULL directory state exists -- the parquet files
-AND the empty placeholder dirs for touched buckets the epoch emptied.
-Spark's ``_SUCCESS`` cannot be the commit record here: it lands when the
-parquet job finishes, BEFORE the placeholder ``makedirs`` loop, so a
-crash in that window would leave a committed-looking epoch whose emptied
-buckets silently resolve to their stale pre-delete version (deleted-row
-resurrection, ADVICE r9). With the sentinel, a torn epoch is invisible
-as a unit and checkpoint replay rewrites it byte-identically.
-
-Epoch protocol (same as streaming/dedup.py / rollup.py / sketches.py):
-epoch N reads per-bucket state from committed epochs with id < N and
-overwrites ``batch_id=N`` -- change derivation is deterministic, so a
-crash-replayed epoch rewrites byte-identical buckets: exactly-once.
+Epoch protocol: streaming/deltas.py (the base snapshot is epoch -1).
 
 At 100 TB: the snapshot NEVER fully rewrites. A change batch touching k
 of NB buckets costs one broadcast anti-join over k buckets' rows plus a
 k-bucket write; NB scales with corpus size so per-bucket rewrite stays
 bounded. The changed-bucket list is a <= NB-row collect (bounded by
 config, not data). Superseded bucket versions are garbage-collected at
-the START of each epoch (``_gc_superseded``): when epoch N begins, every
+the START of each epoch (``gc_superseded``): when epoch N begins, every
 epoch < N is checkpoint-acked (foreachBatch for N only fires after N-1's
 commit returned), so for each bucket only the newest committed version
 among epochs < N can ever be read again -- older versions delete safely,
@@ -51,20 +38,14 @@ shared batch/stream oracles).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark.streaming import deltas
+
 N_BUCKETS = 8
-
-# Epoch commit sentinel: present only once the epoch dir is COMPLETE
-# (parquet + empty-bucket placeholders). See module docstring.
-COMMIT_MARKER = "_COMMITTED"
-
-
-def _mark_committed(epoch_dir: str) -> None:
-    with open(os.path.join(epoch_dir, COMMIT_MARKER), "w"):
-        pass
 
 _SNAP_SCHEMA = (
     "doc_id bigint, content_md5 string, lang string, source string, "
@@ -120,30 +101,21 @@ def write_base_snapshot(docs: DataFrame, work_dir: str) -> None:
         "lang", "source", "n_chars",
         F.lit(0).cast("int").alias("version"),
     ).withColumn("bucket", _bucket(F.col("doc_id")))
-    base_dir = os.path.join(work_dir, "snap", "batch_id=-1")
-    snap.write.mode("overwrite").partitionBy("bucket").parquet(base_dir)
-    _mark_committed(base_dir)
+    snap.write.mode("overwrite").partitionBy("bucket").parquet(
+        deltas.epoch_dir(work_dir, "snap", -1)
+    )
+    deltas.commit_epoch(work_dir, -1)
 
 
-def _bucket_versions(snap_dir: str, before_epoch: int) -> dict[int, str]:
-    """{bucket: path of its newest committed version among epochs < N}.
-    Committed = the epoch dir carries OUR _COMMITTED sentinel (written
-    after parquet AND empty-bucket placeholders; Spark's _SUCCESS alone
-    is a torn epoch); a crash-epoch is invisible to both replaying
-    writers and readers as a unit."""
+def bucket_versions(work_dir: str, before_epoch: int) -> dict[int, str]:
+    """{bucket: path of its newest committed version among epochs < N}. A
+    torn epoch is invisible to replaying writers and readers as a unit;
+    a committed epoch whose versions were all superseded may be gone."""
     out: dict[int, str] = {}
-    if not os.path.isdir(snap_dir):
-        return out
-    epochs = []
-    for d in os.listdir(snap_dir):
-        if d.startswith("batch_id="):
-            i = int(d.split("=", 1)[1])
-            if i < before_epoch and os.path.exists(
-                os.path.join(snap_dir, d, COMMIT_MARKER)
-            ):
-                epochs.append(i)
-    for eid in sorted(epochs, reverse=True):
-        edir = os.path.join(snap_dir, f"batch_id={eid}")
+    for eid in reversed(deltas.committed_epochs(work_dir, before_epoch)):
+        edir = deltas.epoch_dir(work_dir, "snap", eid)
+        if not os.path.isdir(edir):
+            continue
         for sub in os.listdir(edir):
             if sub.startswith("bucket="):
                 out.setdefault(int(sub.split("=", 1)[1]), os.path.join(edir, sub))
@@ -156,8 +128,8 @@ def changed_buckets(work_dir: str, from_epoch: int, to_epoch: int) -> set[int]:
     resolving to the SAME committed file at both bounds cannot contain
     differing rows, so a diff reads only this set (at 100 TB that is the
     touched fraction of the table, not the table)."""
-    a = _bucket_versions(os.path.join(work_dir, "snap"), from_epoch)
-    b = _bucket_versions(os.path.join(work_dir, "snap"), to_epoch)
+    a = bucket_versions(work_dir, from_epoch)
+    b = bucket_versions(work_dir, to_epoch)
     return {k for k in set(a) | set(b) if a.get(k) != b.get(k)}
 
 
@@ -173,46 +145,46 @@ def read_snapshot(
     column and an empty selection must still have the snapshot shape.
     Passing a WIDER schema than some buckets were written with is the
     evolution read path -- missing columns surface as NULL."""
-    vers = _bucket_versions(os.path.join(work_dir, "snap"), before_epoch)
+    vers = bucket_versions(work_dir, before_epoch)
     paths = [p for b, p in vers.items() if buckets is None or b in buckets]
     if not paths:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*paths)
 
 
-def _gc_superseded(snap_dir: str, before_epoch: int) -> None:
-    """Delete bucket versions superseded by a newer committed epoch < N.
+def gc_superseded(work_dir: str, before_epoch: int) -> None:
+    """Delete bucket versions superseded by a newer committed epoch < N,
+    and torn epoch dirs < N.
 
     Safe because the caller is epoch N's handler: every epoch < N is past
     its checkpoint ack (micro-batches are serial), so no future replay can
     read anything but the newest committed version per bucket among
     epochs < N. Deletion is idempotent -- a crash mid-GC replays it."""
-    import shutil
-
-    newest = _bucket_versions(snap_dir, before_epoch)
-    keep = set(newest.values())
+    snap_dir = os.path.join(work_dir, "snap")
     if not os.path.isdir(snap_dir):
         return
+    keep = set(bucket_versions(work_dir, before_epoch).values())
+    committed = set(deltas.committed_epochs(work_dir, before_epoch))
     for d in os.listdir(snap_dir):
         if not d.startswith("batch_id="):
             continue
-        if int(d.split("=", 1)[1]) >= before_epoch:
+        eid = int(d.split("=", 1)[1])
+        if eid >= before_epoch:
             continue
         edir = os.path.join(snap_dir, d)
-        if not os.path.exists(os.path.join(edir, COMMIT_MARKER)):
-            # torn crash-epoch (even if Spark's _SUCCESS landed, the
-            # placeholder loop didn't): nothing can read it, drop it
+        if eid not in committed:
+            # torn crash-epoch: nothing can read it, drop it
             shutil.rmtree(edir, ignore_errors=True)
             continue
         for sub in os.listdir(edir):
             p = os.path.join(edir, sub)
             if sub.startswith("bucket=") and p not in keep:
                 shutil.rmtree(p, ignore_errors=True)
-        # an epoch dir whose bucket versions are all superseded is a husk
-        # (only markers left); on an unbounded stream husks are O(epochs)
-        # of directory growth -- exposed by the 100-epoch soak witness.
-        # Nothing reads a committed epoch dir except through its bucket=
-        # subdirs, so dropping the empty shell is safe and idempotent.
+        # an epoch dir whose bucket versions are all superseded is a husk;
+        # on an unbounded stream husks are O(epochs) of directory growth
+        # -- exposed by the 100-epoch soak witness. Nothing reads a
+        # committed epoch dir except through its bucket= subdirs, so
+        # dropping the empty shell is safe and idempotent.
         if not any(s.startswith("bucket=") for s in os.listdir(edir)):
             shutil.rmtree(edir, ignore_errors=True)
 
@@ -298,14 +270,15 @@ def apply_merge_epoch(
     merged = untouched.unionByName(upserts).withColumn(
         "bucket", _bucket(F.col("doc_id"))
     )
-    edir = os.path.join(work_dir, "snap", f"batch_id={epoch_id}")
+    edir = deltas.epoch_dir(work_dir, "snap", epoch_id)
     merged.write.mode("overwrite").partitionBy("bucket").parquet(edir)
     for b in touched:
         os.makedirs(os.path.join(edir, f"bucket={b}"), exist_ok=True)
     # Commit LAST: only now are the parquet files and the empty-bucket
-    # placeholders all present. A crash anywhere above leaves the epoch
-    # sentinel-less -> invisible as a unit -> replay rewrites it.
-    _mark_committed(edir)
+    # placeholders all present. Committing before the placeholders would
+    # let a crash resolve an emptied bucket to its stale pre-delete
+    # version (deleted-row resurrection, ADVICE r9).
+    deltas.commit_epoch(work_dir, epoch_id)
 
 
 def streaming_merge_sink(
@@ -336,32 +309,26 @@ def streaming_merge_sink(
     spark = doc_stream.sparkSession
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        _gc_superseded(os.path.join(work_dir, "snap"), epoch_id - retain)
+        gc_superseded(work_dir, epoch_id - retain)
         apply_merge_epoch(
             spark, work_dir, batch_df, epoch_id,
             evolve_rev_from=evolve_rev_from,
             contiguous_keys=contiguous_keys,
         )
 
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(doc_stream, handle, checkpoint)
 
 
 def read_merged_snapshot(spark: SparkSession, work_dir: str) -> DataFrame:
     """Drain: the per-bucket newest committed versions across all epochs."""
-    return read_snapshot(spark, work_dir, 1 << 62)
+    return read_snapshot(spark, work_dir, deltas.ALL_EPOCHS)
 
 
 def _live_file_counts(work_dir: str) -> dict[int, int]:
     """{bucket: parquet part-file count of its CURRENT resolved version}.
     A bounded listdir over <= N_BUCKETS dirs -- the same metadata scan a
     transaction log would answer from its manifest."""
-    vers = _bucket_versions(os.path.join(work_dir, "snap"), 1 << 62)
+    vers = bucket_versions(work_dir, deltas.ALL_EPOCHS)
     return {
         b: sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
         for b, p in vers.items()
@@ -387,10 +354,9 @@ def optimize_snapshot(
     still resolves the original version chain. GC is deliberately NOT run
     here -- retention policy stays with the stream's epoch handler.
 
-    Crash-safe by the same sentinel protocol as data epochs: the rewrite
-    commits via _COMMITTED last, so a crash mid-OPTIMIZE leaves a torn,
-    invisible dir and a retry recomputes the same id idempotently
-    (mode=overwrite). Concurrent writers are excluded by construction --
+    Crash-safe by the same epoch commit as data epochs: the rewrite
+    commits last, so a crash mid-OPTIMIZE leaves a torn, invisible dir
+    and a retry recomputes the same id idempotently (mode=overwrite). Concurrent writers are excluded by construction --
     OPTIMIZE runs where maintenance jobs run in real lakehouses, between
     stream epochs (foreachBatch handlers are serial).
 
@@ -417,24 +383,17 @@ def optimize_snapshot(
     before = sum(counts.values())
     if not fat:
         return {"compacted_buckets": 0, "files_before": before, "files_after": before}
-    snap_dir = os.path.join(work_dir, "snap")
-    committed = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(snap_dir)
-        if d.startswith("batch_id=")
-        and os.path.exists(os.path.join(snap_dir, d, COMMIT_MARKER))
-    ]
-    opt_id = max(committed) + 1
-    rows = read_snapshot(spark, work_dir, 1 << 62, buckets=fat, schema=schema)
+    opt_id = deltas.committed_epochs(work_dir)[-1] + 1
+    rows = read_snapshot(spark, work_dir, deltas.ALL_EPOCHS, buckets=fat, schema=schema)
     # one shuffle partition per fat bucket -> exactly one output file each
     compacted = rows.withColumn("bucket", _bucket(F.col("doc_id"))).repartition(
         len(fat), "bucket"
     )
-    edir = os.path.join(snap_dir, f"batch_id={opt_id}")
+    edir = deltas.epoch_dir(work_dir, "snap", opt_id)
     compacted.write.mode("overwrite").partitionBy("bucket").parquet(edir)
     for b in fat:  # a fat bucket is never empty, but keep the invariant total
         os.makedirs(os.path.join(edir, f"bucket={b}"), exist_ok=True)
-    _mark_committed(edir)
+    deltas.commit_epoch(work_dir, opt_id)
     after_counts = _live_file_counts(work_dir)
     return {
         "compacted_buckets": len(fat),

@@ -30,11 +30,11 @@ Per micro-batch (foreachBatch, availableNow):
      (b) the band signatures of all previously processed stream docs
      (epoch state), and (c) itself (id_b < id_a). Candidates verify at
      exact Jaccard >= threshold against the static shingle postings.
-  3. Verdicts land in `out_dir/batch_id=N`, and the batch's hashes + band
-     signatures land in the state dirs under `batch_id=N` -- OVERWRITE per
-     epoch, so a replayed micro-batch after a crash rewrites byte-identical
-     output instead of duplicating state: exactly-once, the same epoch-
-     idempotence contract as sources/sinks.py's bulk sinks.
+  3. Verdicts land in `out/batch_id=N` and the batch's hashes + band
+     signatures in `state_hashes/batch_id=N` / `state_bands/batch_id=N`,
+     all three made visible by one epoch commit (epoch protocol:
+     streaming/deltas.py), so a replayed micro-batch after a crash
+     rewrites byte-identical output instead of duplicating state.
 
 Because the stream replays chunks in doc_id order, "previously processed"
 equals "smaller doc_id", and the drained result is row-identical to the
@@ -46,28 +46,15 @@ admitted batches (bounded by corpus size / 4 bands, not by stream length);
 the static corpus contributes only band-index reads and shingle lookups for
 verified candidates.
 
-Compaction (LSM level-0 fold, exercised by
-tests/test_streaming.py::test_streaming_dedup_compaction_crash_resume):
-each epoch reads the union of earlier state dirs, so a long-lived stream
-accumulates O(epochs) small dirs. When the committed delta count reaches
-`compact_every`, the epoch folds base + deltas into a new
-`base_upto=<max folded epoch>` dir -- a DETERMINISTIC union keyed by the
-max folded epoch, so a crash mid-fold replays it idempotently (overwrite
-of the same dir name, torn dirs have no _SUCCESS and are invisible).
-Folded delta dirs and superseded bases are dropped by a GC pass at the
-START of the NEXT epoch, never inside the epoch that wrote the base, so a
-crash anywhere leaves at least one complete representation on disk.
-Readers take the newest committed base plus the deltas above its
-watermark; state content is identical before and after a fold.
+The hash and band state compact with the shared LSM fold of
+streaming/deltas.py (exercised by tests/test_streaming.py::
+test_streaming_dedup_compaction_crash_resume).
 """
 
 from __future__ import annotations
 
 import os
-import threading
-from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -78,6 +65,8 @@ from rlink_rs_spark.operators.dedup import (
     verify_jaccard,
     with_shingles,
 )
+from rlink_rs_spark.streaming import deltas
+
 
 def dedup_stream(
     df: DataFrame,
@@ -103,20 +92,7 @@ _OUT_SCHEMA_Q = (
     "doc_id bigint, passes_quality boolean, exact_dup boolean, "
     "near_dup_of bigint, admit boolean"
 )
-
-
-# The LSM fold machinery this module pioneered now lives in
-# streaming/deltas.py (shared by every append-only delta sink); the
-# private aliases keep this module's protocol vocabulary and existing
-# test imports stable.
-from rlink_rs_spark.streaming.deltas import (  # noqa: E402
-    compact as _compact,
-    epoch_dirs as _epoch_dirs,
-    gc_folded as _gc_folded,
-    newest_base as _newest_base,
-    read_state as _read_state,
-    state_inputs as _state_inputs,
-)
+_STATE = (("state_hashes", _HASH_SCHEMA), ("state_bands", _BAND_SCHEMA))
 
 
 def streaming_incremental_dedup_sink(
@@ -129,19 +105,14 @@ def streaming_incremental_dedup_sink(
     threshold: float = 0.7,
     n_hashes: int = 16,
     bands: int = 4,
-    crash_at_epoch: int | None = None,
     score_fn=None,
     compact_every: int = 8,
-    crash_in_compaction_at: int | None = None,
     static_frames_out: list | None = None,
     corpus_sets_df: DataFrame | None = None,
 ):
     """Wire the admit pipeline as a foreachBatch sink over `doc_stream`
     (columns doc_id, text, ...). Returns the started StreamingQuery;
-    verdicts accumulate under `<work_dir>/out`. `crash_at_epoch` raises
-    mid-epoch BEFORE any state commit on the FIRST attempt only -- the
-    kill/resume test hook (a marker file records the crash so the resumed
-    run proceeds).
+    verdicts accumulate under `<work_dir>/out`.
 
     `score_fn` (optional) turns this into the FULL intake pipeline: a
     callable mapping the raw micro-batch to (doc_id, passes boolean) --
@@ -154,15 +125,8 @@ def streaming_incremental_dedup_sink(
     `compact_every` is the LSM-style fold trigger: once that many delta
     dirs have committed since the last base, the epoch folds them (plus
     the old base) into a new `base_upto=` dir; folded dirs are GC'd at
-    the start of the NEXT epoch. `crash_in_compaction_at` raises BETWEEN
-    the two state dirs' folds (hashes folded, bands not) on the first
-    attempt only -- the mid-compaction kill/resume test hook."""
+    the start of the NEXT epoch."""
     spark = doc_stream.sparkSession
-    out_dir = os.path.join(work_dir, "out")
-    hash_dir = os.path.join(work_dir, "state_hashes")
-    band_dir = os.path.join(work_dir, "state_bands")
-    crash_marker = os.path.join(work_dir, "crashed_once")
-    compact_crash_marker = os.path.join(work_dir, "crashed_in_compaction")
 
     # Static frames every epoch re-reads: materialize ONCE before the
     # stream starts instead of re-aggregating the standing corpus per
@@ -199,46 +163,13 @@ def streaming_incremental_dedup_sink(
         # so callers that skip this never balloon the cache either)
         static_frames_out.extend((hist_hashes, corpus_sets))
 
-    # Warm the two standing statics CONCURRENTLY with stream startup
-    # (guide §2.6 -- overlap independent jobs): the two cache builds are
-    # independent of each other AND of the checkpoint/batch-planning dead
-    # time between .start() and epoch 0, so two background jobs hide most
-    # of their cost. handle() joins these threads before first use, so no
-    # job outlives the drain; a failed warm is harmless (the epoch's own
-    # jobs materialize the cache inline exactly as before).
-    def _warm(df: DataFrame) -> None:
-        try:
-            df.count()
-        except Exception:
-            pass
-
-    warm_threads = [
-        threading.Thread(target=inheritable_thread_target(spark)(lambda f=f: _warm(f)), daemon=True)
-        for f in (hist_hashes, corpus_sets)
-    ]
-
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        for w_t in warm_threads:
-            w_t.join()
-        if crash_at_epoch is not None and epoch_id == crash_at_epoch and not os.path.exists(crash_marker):
-            with open(crash_marker, "w") as f:
-                f.write(str(epoch_id))
-            raise RuntimeError(f"injected crash at epoch {epoch_id}")
-
         # deferred GC of dirs a PRIOR epoch's fold superseded, then this
         # epoch's fold if the committed-delta count reached the trigger
-        _gc_folded(hash_dir)
-        _gc_folded(band_dir)
-        _compact(spark, hash_dir, _HASH_SCHEMA, epoch_id, compact_every)
-        if (
-            crash_in_compaction_at is not None
-            and epoch_id == crash_in_compaction_at
-            and not os.path.exists(compact_crash_marker)
-        ):
-            with open(compact_crash_marker, "w") as f:
-                f.write(str(epoch_id))
-            raise RuntimeError(f"injected mid-compaction crash at epoch {epoch_id}")
-        _compact(spark, band_dir, _BAND_SCHEMA, epoch_id, compact_every)
+        for sub, _ in _STATE:
+            deltas.gc_folded(os.path.join(work_dir, sub))
+        for sub, schema in _STATE:
+            deltas.compact(spark, work_dir, sub, schema, epoch_id, compact_every)
 
         # fan_out the micro-batch before caching: the per-epoch MinHash
         # signature map (8 md5s per posting) otherwise runs at the file
@@ -246,7 +177,11 @@ def streaming_incremental_dedup_sink(
         batch = fan_out(batch_df.select("doc_id", "text")).cache()
 
         # --- exact stage
-        prior_hashes = _read_state(spark, hash_dir, _HASH_SCHEMA, epoch_id).select("h").distinct()
+        prior_hashes = (
+            deltas.read_state(spark, work_dir, "state_hashes", _HASH_SCHEMA, epoch_id)
+            .select("h")
+            .distinct()
+        )
         known = hist_hashes.unionByName(prior_hashes).distinct()
         w = Window.partitionBy("h")
         bh = batch.select("doc_id", F.md5("text").alias("h")).withColumn(
@@ -266,7 +201,9 @@ def streaming_incremental_dedup_sink(
             n_hashes=n_hashes,
             bands=bands,
         ).cache()
-        prior_bands = _read_state(spark, band_dir, _BAND_SCHEMA, epoch_id)
+        prior_bands = deltas.read_state(
+            spark, work_dir, "state_bands", _BAND_SCHEMA, epoch_id
+        )
         bb = batch_banded.select(F.col("doc_id").alias("id_a"), "band", "sig")
         earlier = hist_banded.unionByName(prior_bands).select(
             F.col("doc_id").alias("id_b"), "band", "sig"
@@ -308,57 +245,28 @@ def streaming_incremental_dedup_sink(
                 (pq & F.col("admit")).alias("admit"),
             )
 
-        # --- epoch-idempotent commits (overwrite THIS epoch's dirs only),
-        # submitted CONCURRENTLY (guide §2.6): the three writes share no
-        # data dependency -- verdict reads (batch, batch_banded) caches,
-        # hash state reads batch, band state reads batch_banded -- and each
-        # is a tiny scheduling-bound driver job, so overlapping them hides
-        # the two cheap commits under the verdict job. Cache races are safe
-        # (BlockManager per-block write locks: one task computes, the other
-        # blocks then reads); crash semantics are unchanged because all
-        # three are per-epoch overwrites and a replayed epoch rewrites
-        # byte-identical dirs whichever subset a crash left behind.
-        # Hash-state commit writes bh's (doc_id, h) directly (r16, guide
-        # §1.2): `ex` is bh LEFT-joined against the DISTINCT known set, so
-        # its (doc_id, h) projection is row-identical to bh's -- routing the
-        # state write through `ex` re-evaluated the whole exact stage
-        # (hist-union-distinct + membership join) a second time per epoch
-        # just to throw the verdict column away. bh reads the cached batch.
-        hash_frame = bh.select("doc_id", "h")
-        commits = (
-            lambda: verdict.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={epoch_id}")
-            ),
-            lambda: hash_frame.write.mode("overwrite").parquet(
-                os.path.join(hash_dir, f"batch_id={epoch_id}")
-            ),
-            lambda: batch_banded.write.mode("overwrite").parquet(
-                os.path.join(band_dir, f"batch_id={epoch_id}")
-            ),
-        )
-        with ThreadPoolExecutor(max_workers=len(commits)) as pool:
-            futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in commits]
-            for fut in futures:
-                fut.result()
+        # --- the epoch's three writes, then its commit. Hash state writes
+        # bh's (doc_id, h) directly (r16, guide §1.2): `ex` is bh LEFT-
+        # joined against the DISTINCT known set, so its (doc_id, h)
+        # projection is row-identical to bh's -- routing the state write
+        # through `ex` re-evaluated the whole exact stage a second time per
+        # epoch just to throw the verdict column away.
+        for sub, frame in (
+            ("out", verdict),
+            ("state_hashes", bh.select("doc_id", "h")),
+            ("state_bands", batch_banded),
+        ):
+            frame.write.mode("overwrite").parquet(deltas.epoch_dir(work_dir, sub, epoch_id))
+        deltas.commit_epoch(work_dir, epoch_id)
         batch.unpersist()
         batch_banded.unpersist()
 
-    for w_t in warm_threads:
-        w_t.start()
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(doc_stream, handle, checkpoint)
 
 
 def read_verdicts(spark: SparkSession, work_dir: str, with_quality: bool = False) -> DataFrame:
     """All committed verdict rows (one per streamed doc)."""
-    schema = _OUT_SCHEMA_Q if with_quality else _OUT_SCHEMA
-    out_dir = os.path.join(work_dir, "out")
-    dirs = _epoch_dirs(out_dir, 1 << 62)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
+    return deltas.read_committed(
+        spark, work_dir, "out", _OUT_SCHEMA_Q if with_quality else _OUT_SCHEMA,
+        deltas.committed_epochs(work_dir),
+    )

@@ -12,21 +12,16 @@ epoch's state. Chunks replay in doc_id order, so carried-total +
 within-batch prefix equals the global per-lang cumsum and the drained
 (lang, bin) aggregate hash-matches the batch oracle.
 
-Epoch protocol: deltas first, state (the commit record, _SUCCESS-gated
-like every carrier in this repo) last -- epoch N+1 only fires after N's
-handler returned, so it always reads N's committed totals; a crash
-anywhere in N replays both writes byte-identically. State is O(#langs),
-constant in stream length.
+Epoch protocol: streaming/deltas.py (one commit covers `deltas/` and
+`state/`). State is O(#langs), constant in stream length.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rlink_rs_spark.streaming.sampling import _latest_epoch_dir
+from rlink_rs_spark.streaming import deltas
 
 _STATE_SCHEMA = "lang string, total bigint"
 _DELTA_SCHEMA = "doc_id bigint, lang string, n bigint, bin bigint"
@@ -41,8 +36,6 @@ def streaming_pack_sink(
     from rlink_rs_spark.operators.ranking import with_group_prefix_sum
 
     spark = doc_stream.sparkSession
-    state_dir = os.path.join(work_dir, "state")
-    delta_dir = os.path.join(work_dir, "deltas")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         sized = batch_df.select(
@@ -50,11 +43,9 @@ def streaming_pack_sink(
         )
         if sized.isEmpty():
             return
-        prev = _latest_epoch_dir(state_dir, epoch_id)
-        carried = (
-            spark.read.schema(_STATE_SCHEMA).parquet(prev)
-            if prev is not None
-            else spark.createDataFrame([], _STATE_SCHEMA)
+        carried = deltas.read_committed(
+            spark, work_dir, "state", _STATE_SCHEMA,
+            deltas.latest_committed(work_dir, epoch_id),
         )
         cum = with_group_prefix_sum(sized, ["lang"], [F.col("doc_id")], "n")
         offset = cum.join(F.broadcast(carried), "lang", "left").fillna(
@@ -67,7 +58,7 @@ def streaming_pack_sink(
             ).cast("bigint").alias("bin"),
         )
         assigned.write.mode("overwrite").parquet(
-            os.path.join(delta_dir, f"batch_id={epoch_id}")
+            deltas.epoch_dir(work_dir, "deltas", epoch_id)
         )
         new_state = (
             carried.unionByName(
@@ -77,24 +68,19 @@ def streaming_pack_sink(
             .agg(F.sum("total").cast("bigint").alias("total"))
         )
         new_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={epoch_id}")
+            deltas.epoch_dir(work_dir, "state", epoch_id)
         )
+        deltas.commit_epoch(work_dir, epoch_id)
 
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(doc_stream, handle, checkpoint)
 
 
 def read_packed_bins(spark: SparkSession, work_dir: str) -> DataFrame:
     """Drain: aggregate the per-doc assignments into the batch twin's
     (lang, bin, n_docs, total_tokens) shape."""
-    from rlink_rs_spark.streaming.deltas import read_deltas
-
-    assigned = read_deltas(spark, os.path.join(work_dir, "deltas"), _DELTA_SCHEMA)
+    assigned = deltas.read_committed(
+        spark, work_dir, "deltas", _DELTA_SCHEMA, deltas.committed_epochs(work_dir)
+    )
     return assigned.groupBy("lang", "bin").agg(
         F.count("*").alias("n_docs"), F.sum("n").alias("total_tokens")
     )

@@ -5,7 +5,8 @@ the DAG (element.rs:361-370, source_runnable.rs:217-245); Spark's
 Trigger.AvailableNow is the same concept: process everything available,
 finalize state, stop. run_to_memory drives a streaming DataFrame to
 completion synchronously and returns the materialized result -- the bridge
-that lets streaming pipelines flow through the batch correctness gate.
+that lets streaming pipelines flow through the batch correctness gate. Every
+bounded query in this repo finishes through drain.
 """
 
 from __future__ import annotations
@@ -14,8 +15,10 @@ import os
 import tempfile
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 
 def _await_listener_drain(listener, query_id: str, timeout: float = 30.0) -> None:
@@ -51,6 +54,58 @@ def drain_timeout(base: float = 600.0) -> float:
     return float(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", base))
 
 
+def drain(
+    spark: SparkSession,
+    start: Callable[[], StreamingQuery],
+    name: str,
+    timeout_seconds: float | None = None,
+    shuffle_partitions: int | None = None,
+    listener=None,
+) -> None:
+    """Start a bounded (availableNow) streaming query with `start()`, wait
+    until it finished, and stop it if it is still active. Raises a
+    TimeoutError naming the query when it does not finish within
+    `timeout_seconds` (drain_timeout() by default); a failed query raises
+    its StreamingQueryException.
+
+    listener: an optional StreamingQueryListener (e.g. metrics.
+    ProgressCollector) registered for exactly the lifetime of this run --
+    the coordinator-side metrics tap (numRowsDroppedByWatermark, state
+    rows) for queries that report on engine behavior, not just data.
+
+    shuffle_partitions: stateful streaming ops create one state store per
+    shuffle partition, and that per-store overhead (commit, snapshot,
+    eviction scan) dominates small/medium state -- measured 10.8s -> 3.1s on
+    the interval join at sf0.1 going 32 -> 8. The value is pinned into the
+    checkpoint at first run; size it to expected state volume (at 100 TB:
+    hundreds, here: single digits), not to CPU count."""
+    if timeout_seconds is None:
+        timeout_seconds = drain_timeout()
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if listener is not None:
+        spark.streams.addListener(listener)
+    try:
+        q = start()
+        try:
+            finished = q.awaitTermination(timeout_seconds)
+        finally:
+            if q.isActive:
+                q.stop()
+        if not finished:
+            raise TimeoutError(
+                f"streaming query {name!r} did not finish within {timeout_seconds:g}s"
+            )
+        if listener is not None:
+            _await_listener_drain(listener, str(q.id))
+    finally:
+        if listener is not None:
+            spark.streams.removeListener(listener)
+        if shuffle_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     output_mode: str = "append",
@@ -61,60 +116,31 @@ def run_to_memory(
 ) -> DataFrame:
     """Execute a streaming DataFrame with availableNow into a memory sink;
     block until completion; return the result as a (batch) DataFrame.
-
-    listener: an optional StreamingQueryListener (e.g. metrics.
-    ProgressCollector) registered for exactly the lifetime of this run --
-    the coordinator-side metrics tap (numRowsDroppedByWatermark, state
-    rows) for queries that report on engine behavior, not just data.
+    `shuffle_partitions` and `listener` as in drain.
 
     Append-mode windowed aggregations emit only windows closed by the final
     watermark (window_end <= max_event_ts - delay); still-open windows stay
     in the state store -- that withholding is part of the semantics under
     test, not an artifact.
-
-    shuffle_partitions: stateful streaming ops create one state store per
-    shuffle partition, and that per-store overhead (commit, snapshot,
-    eviction scan) dominates small/medium state -- measured 10.8s -> 3.1s on
-    the interval join at sf0.1 going 32 -> 8. The value is pinned into the
-    checkpoint at first run; size it to expected state volume (at 100 TB:
-    hundreds, here: single digits), not to CPU count.
     """
     spark: SparkSession = stream_df.sparkSession
-    if timeout_seconds is None:
-        timeout_seconds = drain_timeout(300.0)
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ck = checkpoint_dir or tempfile.mkdtemp(prefix="rlink_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if listener is not None:
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-        finally:
-            if q.isActive:
-                q.stop()
-        if listener is not None and finished:
-            _await_listener_drain(listener, str(q.id))
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        raise TimeoutError(
-            f"streaming query {name!r} did not finish within {timeout_seconds}s; "
-            "refusing to return a truncated memory table"
-        )
+    drain(
+        spark,
+        lambda: stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start(),
+        name,
+        timeout_seconds=(
+            drain_timeout(300.0) if timeout_seconds is None else timeout_seconds
+        ),
+        shuffle_partitions=shuffle_partitions,
+        listener=listener,
+    )
     return spark.table(name)
 
 
@@ -141,41 +167,23 @@ def run_to_parquet(
     stream-stream joins.
     """
     spark: SparkSession = stream_df.sparkSession
-    if timeout_seconds is None:
-        timeout_seconds = drain_timeout(300.0)
     out_dir = output_dir or tempfile.mkdtemp(prefix="rlink_pq_out_")
     ck = checkpoint_dir or tempfile.mkdtemp(prefix="rlink_pq_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if listener is not None:
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-        finally:
-            if q.isActive:
-                q.stop()
-        if listener is not None and finished:
-            _await_listener_drain(listener, str(q.id))
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        raise TimeoutError(
-            f"streaming parquet sink did not finish within {timeout_seconds}s; "
-            "refusing to return a truncated directory"
-        )
+    drain(
+        spark,
+        lambda: stream_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start(),
+        f"parquet sink {out_dir}",
+        timeout_seconds=(
+            drain_timeout(300.0) if timeout_seconds is None else timeout_seconds
+        ),
+        shuffle_partitions=shuffle_partitions,
+        listener=listener,
+    )
     # explicit schema: a zero-row drain writes only _spark_metadata and an
     # inferring read would fail; the stream's own schema is the contract
     return spark.read.schema(stream_df.schema).parquet(out_dir)

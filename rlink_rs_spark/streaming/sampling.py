@@ -9,10 +9,7 @@ language, CONSTANT in stream length -- and the drained result is
 row-identical to the batch query over the same rows (deterministic salted
 md5 keys make the draw independent of arrival order and partitioning).
 
-Epoch protocol (same as streaming/dedup.py): the reservoir AFTER epoch N
-commits to `<state>/batch_id=N` with overwrite semantics; epoch N reads the
-newest committed reservoir with id < N, so a crash-replayed epoch rewrites
-byte-identical state instead of compounding -- exactly-once.
+Epoch protocol: streaming/deltas.py (the reservoir after epoch N in `reservoir/batch_id=N`).
 
 Reference parity: the reference's per-stream sampling would live in a
 CoProcess with keyed state (core/function.rs:256-272); here the state is
@@ -21,35 +18,13 @@ K rows per key and the merge is one rank window per micro-batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rlink_rs_spark.streaming import deltas
+
 _RESERVOIR_SCHEMA = "lang string, doc_id bigint, n_chars bigint, key_n bigint"
-
-
-def _latest_epoch_dir(root: str, before_epoch: int) -> str | None:
-    """Newest COMMITTED epoch dir under `root` with id < before_epoch.
-
-    Committed means the Spark `_SUCCESS` marker is present: a crash mid-write
-    (or mid-overwrite of a replayed epoch) leaves a torn dir without the
-    marker, and both writers and drain-readers must fall back to the last
-    fully-committed epoch instead of failing on partial parquet."""
-    if not os.path.isdir(root):
-        return None
-    best = None
-    for d in os.listdir(root):
-        if d.startswith("batch_id="):
-            i = int(d.split("=", 1)[1])
-            if (
-                i < before_epoch
-                and (best is None or i > best)
-                and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-            ):
-                best = i
-    return None if best is None else os.path.join(root, f"batch_id={best}")
 
 
 def streaming_weighted_reservoir_sink(
@@ -64,7 +39,6 @@ def streaming_weighted_reservoir_sink(
     the integer A-ES key (shared verbatim with the batch query and its
     DuckDB oracle). Returns the started StreamingQuery."""
     spark = doc_stream.sparkSession
-    state_dir = os.path.join(work_dir, "reservoir")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         keyed = batch_df.select(
@@ -75,37 +49,32 @@ def streaming_weighted_reservoir_sink(
             F.col("n_chars").cast("bigint").alias("n_chars"),
             F.expr(key_expr).alias("key_n"),
         )
-        prev_dir = _latest_epoch_dir(state_dir, epoch_id)
-        if prev_dir is not None:
-            prev = spark.read.schema(_RESERVOIR_SCHEMA).parquet(prev_dir)
-            keyed = keyed.unionByName(prev)
+        prev = deltas.read_committed(
+            spark, work_dir, "reservoir", _RESERVOIR_SCHEMA,
+            deltas.latest_committed(work_dir, epoch_id),
+        )
         w = Window.partitionBy("lang").orderBy(F.col("key_n").desc(), F.col("doc_id"))
         merged = (
-            keyed.withColumn("rank", F.row_number().over(w))
+            keyed.unionByName(prev)
+            .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= top_k)
             .drop("rank")
         )
         merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={epoch_id}")
+            deltas.epoch_dir(work_dir, "reservoir", epoch_id)
         )
+        deltas.commit_epoch(work_dir, epoch_id)
 
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(doc_stream, handle, checkpoint)
 
 
 def read_reservoir(spark: SparkSession, work_dir: str, top_k: int = 20) -> DataFrame:
     """Final reservoir (newest committed epoch) with the batch query's
     output shape: (lang, rank, doc_id, n_chars, key)."""
-    state_dir = os.path.join(work_dir, "reservoir")
-    last = _latest_epoch_dir(state_dir, 1 << 62)
-    if last is None:
-        return spark.createDataFrame([], "lang string, rank int, doc_id bigint, n_chars bigint, key double")
-    res = spark.read.schema(_RESERVOIR_SCHEMA).parquet(last)
+    res = deltas.read_committed(
+        spark, work_dir, "reservoir", _RESERVOIR_SCHEMA,
+        deltas.latest_committed(work_dir),
+    )
     w = Window.partitionBy("lang").orderBy(F.col("key_n").desc(), F.col("doc_id"))
     return (
         res.withColumn("rank", F.row_number().over(w).cast("int"))

@@ -12,11 +12,7 @@ the same rows regardless of arrival order or partitioning (deterministic
 md5-derived hashes). This is the property HLL shares in principle but not
 in any engine-portable way; KMV's merge is plain distinct-union + top-K.
 
-Epoch protocol (same as streaming/dedup.py and streaming/sampling.py): the
-sketch AFTER epoch N commits to `<state>/batch_id=N` with overwrite
-semantics; epoch N reads the newest committed sketch with id < N, so a
-crash-replayed epoch rewrites byte-identical state instead of compounding
--- exactly-once.
+Epoch protocol: streaming/deltas.py (one commit covers `hashes/` and `counts/`).
 
 Reference parity: the reference's only approx aggregate is the histogram
 pct (functions/percentile/mod.rs:1-222); a distinct sketch would live in
@@ -31,33 +27,14 @@ never rescanned and state is O(|groups| * K) rows total.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from rlink_rs_spark.streaming.sampling import _latest_epoch_dir
+from rlink_rs_spark.streaming import deltas
 
 _HASH_SCHEMA = "event_type string, h bigint"
 _COUNT_SCHEMA = "event_type string, cnt bigint"
-
-
-def _latest_pair_dir(hash_dir: str, count_dir: str, before_epoch: int) -> str | None:
-    """Newest epoch dir (under hash_dir) whose counts twin is ALSO committed.
-
-    A replayed epoch overwrites counts before hashes; a crash mid-replay can
-    leave the hashes dir committed from the prior attempt while counts is
-    torn, so the pair must be validated together."""
-    before = before_epoch
-    while True:
-        cand = _latest_epoch_dir(hash_dir, before)
-        if cand is None:
-            return None
-        twin = os.path.join(count_dir, os.path.basename(cand))
-        if os.path.exists(os.path.join(twin, "_SUCCESS")):
-            return cand
-        before = int(os.path.basename(cand).split("=", 1)[1])
 
 
 def _kmv_hash(col: str) -> F.Column:
@@ -81,69 +58,47 @@ def streaming_kmv_sink(
     hashes per group) and `counts` (one running row count per group).
     Returns the started StreamingQuery."""
     spark = stream.sparkSession
-    hash_dir = os.path.join(work_dir, "hashes")
-    count_dir = os.path.join(work_dir, "counts")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select(
             F.col(group_col).alias("event_type"), _kmv_hash(value_col).alias("h")
         )
-        batch_counts = batch.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("cnt")
+        prev = deltas.latest_committed(work_dir, epoch_id)
+        counts = (
+            batch.groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+            .unionByName(
+                deltas.read_committed(spark, work_dir, "counts", _COUNT_SCHEMA, prev)
+            )
+            .groupBy("event_type")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        batch_hashes = batch.distinct()
-
-        prev = _latest_pair_dir(hash_dir, count_dir, epoch_id)
-        if prev is not None:
-            prev_hashes = spark.read.schema(_HASH_SCHEMA).parquet(prev)
-            batch_hashes = batch_hashes.unionByName(prev_hashes).distinct()
-            prev_counts = spark.read.schema(_COUNT_SCHEMA).parquet(
-                os.path.join(count_dir, os.path.basename(prev))
-            )
-            batch_counts = (
-                batch_counts.unionByName(prev_counts)
-                .groupBy("event_type")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
+        hashes = batch.unionByName(
+            deltas.read_committed(spark, work_dir, "hashes", _HASH_SCHEMA, prev)
+        ).distinct()
         w = Window.partitionBy("event_type").orderBy("h")
         merged = (
-            batch_hashes.withColumn("rn", F.row_number().over(w))
+            hashes.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= k)
             .drop("rn")
         )
-        # counts first, hashes LAST: the hashes dir (with its _SUCCESS
-        # marker) is the epoch's commit record, so a crash between the two
-        # writes leaves the epoch uncommitted and readers/replay fall back
-        # to the previous fully-committed pair
-        batch_counts.write.mode("overwrite").parquet(
-            os.path.join(count_dir, f"batch_id={epoch_id}")
+        counts.write.mode("overwrite").parquet(
+            deltas.epoch_dir(work_dir, "counts", epoch_id)
         )
         merged.write.mode("overwrite").parquet(
-            os.path.join(hash_dir, f"batch_id={epoch_id}")
+            deltas.epoch_dir(work_dir, "hashes", epoch_id)
         )
+        deltas.commit_epoch(work_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(stream, handle, checkpoint)
 
 
 def read_kmv_estimate(spark: SparkSession, work_dir: str, k: int = 1024) -> DataFrame:
     """Drain the newest committed sketch into the batch twin's output shape
     (event_type, approx_users, cnt)."""
-    hash_dir = os.path.join(work_dir, "hashes")
-    last = _latest_pair_dir(hash_dir, os.path.join(work_dir, "counts"), 1 << 62)
-    if last is None:
-        return spark.createDataFrame(
-            [], "event_type string, approx_users bigint, cnt bigint"
-        )
-    hashes = spark.read.schema(_HASH_SCHEMA).parquet(last)
-    counts = spark.read.schema(_COUNT_SCHEMA).parquet(
-        os.path.join(work_dir, "counts", os.path.basename(last))
-    )
+    last = deltas.latest_committed(work_dir)
+    hashes = deltas.read_committed(spark, work_dir, "hashes", _HASH_SCHEMA, last)
+    counts = deltas.read_committed(spark, work_dir, "counts", _COUNT_SCHEMA, last)
     two60 = 1 << 60
     sk = hashes.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_small"), F.max("h").alias("kth")
@@ -177,7 +132,6 @@ def streaming_cms_sink(
     `bucket_expr` is the Spark SQL bucket expression shared verbatim with
     the batch query and its DuckDB oracle."""
     spark = stream.sparkSession
-    cdir = os.path.join(work_dir, "counters")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         rows = spark.range(d).select(F.col("id").cast("int").alias("r"))
@@ -186,26 +140,25 @@ def streaming_cms_sink(
             .groupBy("r", F.expr(bucket_expr).alias("b"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        prev = _latest_epoch_dir(cdir, epoch_id)
-        if prev is not None:
-            delta = delta.unionByName(spark.read.schema(_CMS_SCHEMA).parquet(prev))
-        merged = delta.groupBy("r", "b").agg(F.sum("c").cast("bigint").alias("c"))
-        merged.write.mode("overwrite").parquet(
-            os.path.join(cdir, f"batch_id={epoch_id}")
+        prev = deltas.read_committed(
+            spark, work_dir, "counters", _CMS_SCHEMA,
+            deltas.latest_committed(work_dir, epoch_id),
         )
+        merged = (
+            delta.unionByName(prev)
+            .groupBy("r", "b")
+            .agg(F.sum("c").cast("bigint").alias("c"))
+        )
+        merged.write.mode("overwrite").parquet(
+            deltas.epoch_dir(work_dir, "counters", epoch_id)
+        )
+        deltas.commit_epoch(work_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return deltas.start_epoch_sink(stream, handle, checkpoint)
 
 
 def read_cms_counters(spark: SparkSession, work_dir: str) -> DataFrame:
     """Drain the newest committed counter table (r, b, c)."""
-    last = _latest_epoch_dir(os.path.join(work_dir, "counters"), 1 << 62)
-    if last is None:
-        return spark.createDataFrame([], _CMS_SCHEMA)
-    return spark.read.schema(_CMS_SCHEMA).parquet(last)
+    return deltas.read_committed(
+        spark, work_dir, "counters", _CMS_SCHEMA, deltas.latest_committed(work_dir)
+    )

@@ -53,3 +53,29 @@ def run_query_vs_oracle(spark, duck, sf_dir, name: str, atol: float = 0.0):
     oracle_pdf = duck.sql(q.oracle).df()
     assert_frames_match(spark_pdf, oracle_pdf, atol=atol)
     return spark_pdf
+
+
+def fail_once(monkeypatch, name: str, should_fail, message: str, after: bool = False) -> list:
+    """Patch streaming.deltas.<name> so that the first call whose positional
+    arguments satisfy ``should_fail`` raises RuntimeError(message) -- before
+    the real call, or right after it with ``after=True``. The sinks call
+    deltas' functions through the module, so the patch reaches their epoch
+    handlers. Returns the list the failing call's arguments land in."""
+    from rlink_rs_spark.streaming import deltas
+
+    real = getattr(deltas, name)
+    fired: list = []
+
+    def patched(*args):
+        hit = not fired and should_fail(*args)
+        if hit and not after:
+            fired.append(args)
+            raise RuntimeError(message)
+        out = real(*args)
+        if hit:
+            fired.append(args)
+            raise RuntimeError(message)
+        return out
+
+    monkeypatch.setattr(deltas, name, patched)
+    return fired

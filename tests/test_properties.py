@@ -356,7 +356,7 @@ def test_kmv_merge_is_exact_property(values, cuts, k):
         st.tuples(
             st.integers(min_value=-1, max_value=12),          # epoch id
             st.sets(st.integers(min_value=0, max_value=7)),   # buckets written
-            st.booleans(),                                    # committed (_COMMITTED)?
+            st.booleans(),                                    # committed?
         ),
         min_size=1,
         max_size=12,
@@ -367,20 +367,18 @@ def test_kmv_merge_is_exact_property(values, cuts, k):
 )
 def test_cdc_bucket_resolution_and_gc_safety(tmp_path_factory, commits, before_epoch, retain):
     """Pure-filesystem property of the CDC snapshot protocol
-    (streaming/cdc.py): _bucket_versions resolves each bucket to its
+    (streaming/cdc.py): bucket_versions resolves each bucket to its
     newest COMMITTED epoch < N regardless of write/torn history, and a
     GC pass with any retention can never delete the version that a
     subsequent in-window resolution would return."""
     import os
     import shutil
 
-    from rlink_rs_spark.streaming.cdc import (
-        COMMIT_MARKER,
-        _bucket_versions,
-        _gc_superseded,
-    )
+    from rlink_rs_spark.streaming.cdc import bucket_versions, gc_superseded
+    from rlink_rs_spark.streaming.deltas import commit_epoch
 
-    snap = str(tmp_path_factory.mktemp("snap"))
+    work = str(tmp_path_factory.mktemp("cdc"))
+    snap = os.path.join(work, "snap")
     try:
         for eid, buckets, committed in commits:
             edir = os.path.join(snap, f"batch_id={eid}")
@@ -388,7 +386,7 @@ def test_cdc_bucket_resolution_and_gc_safety(tmp_path_factory, commits, before_e
                 os.makedirs(os.path.join(edir, f"bucket={b}"), exist_ok=True)
             os.makedirs(edir, exist_ok=True)
             if committed:
-                open(os.path.join(edir, COMMIT_MARKER), "w").close()
+                commit_epoch(work, eid)
 
         def expected(n):
             out = {}
@@ -400,17 +398,17 @@ def test_cdc_bucket_resolution_and_gc_safety(tmp_path_factory, commits, before_e
                         )
             return out
 
-        assert _bucket_versions(snap, before_epoch) == expected(before_epoch)
+        assert bucket_versions(work, before_epoch) == expected(before_epoch)
 
         # GC as epoch `before_epoch` would run it, with retention
-        _gc_superseded(snap, before_epoch - retain)
+        gc_superseded(work, before_epoch - retain)
         # every in-retention-window resolution is unchanged
         for n in range(max(0, before_epoch - retain), before_epoch + 1):
-            got = _bucket_versions(snap, n)
+            got = bucket_versions(work, n)
             want = expected(n)
             assert got == want, (n, got, want)
     finally:
-        shutil.rmtree(snap, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_shingle_sets_match_grouped_collect_set(spark, edge_tables):

@@ -17,6 +17,7 @@ from rlink_rs_spark.plans.pipeline import Pipeline, SlidingEventTimeWindows
 from rlink_rs_spark.streaming.runner import run_to_memory
 from rlink_rs_spark.streaming.sources import file_stream, kafka_source_options
 from rlink_rs_spark.tables import load_table
+from tests.helpers import fail_once
 
 _PROVIDER_PKG = "org.apache.spark.sql.execution.streaming.state"
 
@@ -1292,7 +1293,7 @@ def test_transition_pairs_match_batch_lead(spark, sf_dir):
     assert len(got) == events.count() - n_users
 
 
-def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_dir):
+def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_dir, monkeypatch):
     """Inject a crash at epoch 2 of the incremental-dedup intake stream,
     resume from the checkpoint (same work_dir + staged source), and require
     the drained verdicts to be row-identical to incremental_batch_dedup --
@@ -1329,7 +1330,7 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
     work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_test_")
     ck = tempfile.mkdtemp(prefix="rlink_sdedup_test_ck_")
 
-    def start(crash_at):
+    def start():
         src = stream_from_staged(
             spark, staged, sf_dir, "documents", max_files_per_trigger=1
         ).where(F.col("doc_id") % 4 == 0)
@@ -1343,17 +1344,25 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
             threshold=_INCR_THR,
             n_hashes=_N_HASHES,
             bands=_BANDS,
-            crash_at_epoch=crash_at,
         )
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    q = start(crash_at=2)
+    def crash_once(wd, epoch_id):
+        if epoch_id != 2:
+            return False
+        with open(os.path.join(work_dir, "crashed_once"), "w") as f:
+            f.write(str(epoch_id))
+        return True
+
+    # epoch 2's writes land, its commit raises (first attempt only)
+    fail_once(monkeypatch, "commit_epoch", crash_once, "injected crash at epoch 2")
+    q = start()
     with pytest.raises(StreamingQueryException, match="injected crash"):
         q.awaitTermination(300)
     assert os.path.exists(os.path.join(work_dir, "crashed_once"))
 
-    q2 = start(crash_at=2)  # marker file makes the retry proceed
+    q2 = start()  # the injected failure fires once; the retry proceeds
     assert q2.awaitTermination(300), "resumed intake stream timed out"
     assert q2.exception() is None
 
@@ -1479,7 +1488,7 @@ def test_streaming_kmv_bounded_state_and_crash_resume(spark, sf_dir):
     assert got == want and got
 
 
-def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
+def test_streaming_intake_score_seam_crash_resume(spark, sf_dir, monkeypatch):
     """The score_fn seam (streaming_intake_pipeline's quality stage) under
     kill/resume: with a synthetic deterministic gate (doc_id % 2 == 0), the
     drained verdicts must equal the batch dedup twin with admit ANDed by
@@ -1520,7 +1529,7 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
     def gate(batch_df):
         return batch_df.select("doc_id", (F.col("doc_id") % 2 == 0).alias("passes"))
 
-    def start(crash_at):
+    def start():
         src = stream_from_staged(
             spark, staged, sf_dir, "documents", max_files_per_trigger=1
         ).where(F.col("doc_id") % 4 == 0)
@@ -1534,15 +1543,15 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
             threshold=_INCR_THR,
             n_hashes=_N_HASHES,
             bands=_BANDS,
-            crash_at_epoch=1,
             score_fn=gate,
         )
 
-    q = start(crash_at=1)
+    fail_once(monkeypatch, "commit_epoch", lambda wd, e: e == 1, "injected crash at epoch 1")
+    q = start()
     with pytest.raises(StreamingQueryException, match="injected crash"):
         q.awaitTermination(300)
 
-    q2 = start(crash_at=1)
+    q2 = start()
     assert q2.awaitTermination(300), "resumed intake stream timed out"
 
     got = {
@@ -1661,7 +1670,7 @@ def test_streaming_cms_counters_equal_batch_fold(spark, sf_dir):
     assert got == want and got
 
 
-def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
+def test_streaming_dedup_compaction_crash_resume(spark, sf_dir, monkeypatch):
     """Epoch-state compaction (VERDICT r8 #3): run the intake stream over 8
     micro-batches with an LSM fold every 3 committed deltas, kill it
     MID-COMPACTION (after the hashes fold commits, before the bands fold),
@@ -1678,8 +1687,8 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
         _N_HASHES,
         _documents_fingerprint,
     )
+    from rlink_rs_spark.streaming.deltas import newest_base
     from rlink_rs_spark.streaming.dedup import (
-        _newest_base,
         read_verdicts,
         streaming_incremental_dedup_sink,
     )
@@ -1715,21 +1724,26 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
             n_hashes=_N_HASHES,
             bands=_BANDS,
             compact_every=3,          # first fold at epoch 3 (deltas 0,1,2)
-            crash_in_compaction_at=3,  # between the hashes and bands folds
         )
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    # epoch 3: raise right after the hashes fold, before the bands fold
+    fail_once(
+        monkeypatch, "compact",
+        lambda spark_, wd, sub, schema, before, every: sub == "state_hashes" and before == 3,
+        "injected mid-compaction crash at epoch 3", after=True,
+    )
     q = start()
     with pytest.raises(StreamingQueryException, match="mid-compaction"):
         q.awaitTermination(300)
     hash_dir = os.path.join(work_dir, "state_hashes")
     band_dir = os.path.join(work_dir, "state_bands")
     # the crash window's exact state: hashes folded and committed, bands not
-    assert _newest_base(hash_dir) == (os.path.join(hash_dir, "base_upto=2"), 2)
-    assert _newest_base(band_dir) == (None, -1)
+    assert newest_base(hash_dir) == (os.path.join(hash_dir, "base_upto=2"), 2)
+    assert newest_base(band_dir) == (None, -1)
 
-    q2 = start()  # marker file makes the retried fold proceed
+    q2 = start()  # the injected failure fires once; the retried fold proceeds
     assert q2.awaitTermination(300), "resumed intake stream timed out"
     assert q2.exception() is None
 
@@ -1743,7 +1757,7 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     # both state dirs folded (second trigger at epoch 6 covers deltas 3-5)
     # and the GC pass dropped every delta the newest base covers
     for d in (hash_dir, band_dir):
-        base, upto = _newest_base(d)
+        base, upto = newest_base(d)
         assert base is not None and upto == 5, (d, base, upto)
         leftover = [
             x for x in os.listdir(d)
@@ -1757,13 +1771,13 @@ def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
     snapshot must equal the batch MERGE row-for-row (per-epoch overwrite
     idempotence), every committed epoch dir must contain EXACTLY the
     buckets its chunk's change keys hash to (the file-level pruning the
-    design rides on), and torn (no-_COMMITTED) epochs must be invisible."""
+    design rides on), and torn (uncommitted) epochs must be invisible."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from rlink_rs_spark.queries import REGISTRY
+    from rlink_rs_spark.streaming import deltas
     from rlink_rs_spark.streaming.cdc import (
-        COMMIT_MARKER,
         N_BUCKETS,
         derive_cdc_changes,
         read_merged_snapshot,
@@ -1829,7 +1843,7 @@ def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
             # witness's O(epochs)-directory fix); nothing to check
             present[i] = set()
             continue
-        assert os.path.exists(os.path.join(edir, COMMIT_MARKER)), edir
+        assert os.path.exists(deltas.commit_marker(work_dir, i)), edir
         present[i] = {
             int(d.split("=", 1)[1])
             for d in os.listdir(edir)
@@ -1850,7 +1864,7 @@ def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
     assert acked and all(len(v) == 1 for v in acked.values()), acked
     assert set(acked) == set(range(N_BUCKETS))
 
-    # a torn epoch (no _COMMITTED) must be invisible to the drain reader
+    # a torn epoch (never committed) must be invisible to the drain reader
     before = {tuple(r) for r in read_merged_snapshot(spark, work_dir).collect()}
     torn = os.path.join(snap_dir, "batch_id=99", "bucket=0")
     os.makedirs(torn)
@@ -1953,6 +1967,7 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     'lang_missing' instead of falling through NOT-IN to the clean sink."""
     import shutil
 
+    from rlink_rs_spark.streaming import deltas
     from rlink_rs_spark.streaming.dlq import (
         classify_intake,
         read_clean,
@@ -1989,7 +2004,7 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     assert read_dlq(spark, work_dir).count() == 2
 
     shutil.rmtree(os.path.join(work_dir, "clean"))
-    commits = os.path.join(work_dir, "commits")
+    commits = os.path.join(work_dir, deltas.COMMITS)
     for f in os.listdir(commits):
         os.remove(os.path.join(commits, f))
     # torn epoch: BOTH sinks read empty -- never quarantined-without-clean
@@ -2167,8 +2182,8 @@ def test_cdc_epoch_commit_survives_crash_before_placeholders(spark, sf_dir):
     sees exactly the consistent pre-epoch state) and replay commits it."""
     import shutil
 
+    from rlink_rs_spark.streaming import deltas
     from rlink_rs_spark.streaming.cdc import (
-        COMMIT_MARKER,
         apply_merge_epoch,
         read_merged_snapshot,
         write_base_snapshot,
@@ -2187,11 +2202,11 @@ def test_cdc_epoch_commit_survives_crash_before_placeholders(spark, sf_dir):
     assert base == {(13, 0), (14, 0), (2, 0)}
 
     # simulate the crash: run the full epoch, then strip what the crash
-    # window would not yet have written -- the sentinel and the emptied
+    # window would not yet have written -- the epoch commit and the emptied
     # bucket's placeholder dir (Spark's _SUCCESS stays, that's the bug)
     apply_merge_epoch(spark, work_dir, docs, epoch_id=0)
     edir = os.path.join(work_dir, "snap", "batch_id=0")
-    os.remove(os.path.join(edir, COMMIT_MARKER))
+    os.remove(deltas.commit_marker(work_dir, 0))
     for d in os.listdir(edir):
         full = os.path.join(edir, d)
         if d.startswith("bucket=") and os.path.isdir(full) and not os.listdir(full):
@@ -2219,8 +2234,8 @@ def test_cdc_optimize_compaction_equivalence_and_crash(spark, sf_dir):
     import shutil
 
     from rlink_rs_spark.queries import REGISTRY
+    from rlink_rs_spark.streaming import deltas
     from rlink_rs_spark.streaming.cdc import (
-        COMMIT_MARKER,
         _live_file_counts,
         optimize_snapshot,
         read_merged_snapshot,
@@ -2230,14 +2245,14 @@ def test_cdc_optimize_compaction_equivalence_and_crash(spark, sf_dir):
 
     src_dir = _cdc_snapshot_artifact(spark, sf_dir, retain=8)
     work_dir = tempfile.mkdtemp(prefix="rlink_cdc_opt_test_")
-    shutil.copytree(os.path.join(src_dir, "snap"), os.path.join(work_dir, "snap"))
+    shutil.copytree(src_dir, work_dir, dirs_exist_ok=True)
 
     before_files = _live_file_counts(work_dir)
     assert any(c > 1 for c in before_files.values()), before_files  # fat exists
     want_merged = {tuple(r) for r in read_merged_snapshot(spark, work_dir).collect()}
     want_asof = {tuple(r) for r in read_snapshot(spark, work_dir, before_epoch=2).collect()}
 
-    # crash mid-OPTIMIZE: run it, then strip the sentinel -- the torn
+    # crash mid-OPTIMIZE: run it, then strip its commit -- the torn
     # synthetic epoch must be invisible to every reader
     stats = optimize_snapshot(spark, work_dir, max_files_per_bucket=1)
     assert stats["compacted_buckets"] > 0
@@ -2247,7 +2262,7 @@ def test_cdc_optimize_compaction_equivalence_and_crash(spark, sf_dir):
         if d.startswith("batch_id=") and int(d.split("=", 1)[1]) >= 4
     ]
     assert len(opt_dirs) == 1, opt_dirs
-    os.remove(os.path.join(snap_dir, opt_dirs[0], COMMIT_MARKER))
+    os.remove(deltas.commit_marker(work_dir, int(opt_dirs[0].split("=", 1)[1])))
     torn = {tuple(r) for r in read_merged_snapshot(spark, work_dir).collect()}
     assert torn == want_merged
     assert _live_file_counts(work_dir) == before_files  # still the old chain
@@ -2271,7 +2286,7 @@ def test_cdc_optimize_compaction_equivalence_and_crash(spark, sf_dir):
     assert reg == want_merged
 
 
-def test_delta_sink_compaction_crash_resume(spark, sf_dir):
+def test_delta_sink_compaction_crash_resume(spark, sf_dir, monkeypatch):
     """The shared LSM fold (streaming/deltas.py) behind every append-only
     index sink: drive the BM25 posting index over 6 doc_id-ordered chunks
     with compact_every=2 and a crash injected right after epoch 3's fold
@@ -2302,9 +2317,14 @@ def test_delta_sink_compaction_crash_resume(spark, sf_dir):
             state_dir=state_dir,
             checkpoint=ckpt,
             compact_every=2,
-            crash_after_fold_at=3,
         )
 
+    # epoch 3 (its fold covers epochs < 4): raise right after the fold
+    fail_once(
+        monkeypatch, "compact",
+        lambda spark_, wd, sub, schema, before, every: before == 4,
+        "injected crash after fold at epoch 3", after=True,
+    )
     q = run()
     with pytest.raises(Exception):
         q.awaitTermination(600)
@@ -2354,8 +2374,8 @@ def test_cdc_contiguous_keys_fast_path_matches_anti_join(spark, sf_dir):
     inserts (+10M keys) and one whose delete keys empty no bucket. Also
     pins the precondition direction: identical touched-bucket sets."""
     from rlink_rs_spark.streaming.cdc import (
-        _bucket_versions,
         apply_merge_epoch,
+        bucket_versions,
         read_merged_snapshot,
         write_base_snapshot,
     )
@@ -2379,7 +2399,7 @@ def test_cdc_contiguous_keys_fast_path_matches_anti_join(spark, sf_dir):
         # same resolved bucket-version name set (same touched buckets/epochs)
         snaps[(flag, "vers")] = {
             (b, os.path.basename(os.path.dirname(p)))
-            for b, p in _bucket_versions(os.path.join(wd, "snap"), 1 << 62).items()
+            for b, p in bucket_versions(wd, 1 << 62).items()
         }
     assert snaps[True] == snaps[False]
     assert snaps[(True, "vers")] == snaps[(False, "vers")]
@@ -2394,8 +2414,8 @@ def test_cdc_version_diff_prunes_to_changed_buckets(spark, sf_dir):
     rides at 100 TB."""
     from rlink_rs_spark.streaming.cdc import (
         N_BUCKETS,
-        _bucket_versions,
         apply_merge_epoch,
+        bucket_versions,
         changed_buckets,
         write_base_snapshot,
     )
@@ -2409,7 +2429,7 @@ def test_cdc_version_diff_prunes_to_changed_buckets(spark, sf_dir):
     )
     work_dir = tempfile.mkdtemp(prefix="rlink_cdc_prune_")
     write_base_snapshot(docs, work_dir)
-    base_buckets = set(_bucket_versions(os.path.join(work_dir, "snap"), 1).keys())
+    base_buckets = set(bucket_versions(work_dir, 1).keys())
     assert len(base_buckets) == N_BUCKETS  # the corpus really spans all buckets
 
     batch = docs.where("doc_id = 14")
